@@ -64,29 +64,35 @@ def _doc_shingles(
     distinct would also have deduped ACROSS rows. Equivalence to the
     post-explode distinct is pinned in tests/test_dedup.py."""
     if distinct:
-        # Scan-parallelism floor (r13, guide §2.5 "input skew"): the bench
-        # corpora are ONE parquet file → a 1-split scan, so the regex
-        # tokenize pipeline ran as a single ~3 s task at the head of every
-        # labeling/pair query. Spread the (tiny) document rows across the
-        # cluster by id hash before tokenizing — deterministic, and gated
-        # on the scan actually being narrower than the cluster, so at
-        # 100 TB (thousands of splits) no corpus-text shuffle ever fires.
-        sc = df.sparkSession.sparkContext
-        if df.rdd.getNumPartitions() < sc.defaultParallelism:
-            df = df.repartition(sc.defaultParallelism, F.col(id_col))
-    sh = df.select(
-        F.col(id_col).alias("doc"), tokens(text_col).alias("_toks")
-    )
-    if distinct:
-        return sh.select(
-            "doc",
-            F.explode(
-                F.array_distinct(ngrams_from_tokens(F.col("_toks"), n))
-            ).alias("shingle"),
-        )
+        return _set_shingles(df, text_col, id_col, n)[0]
+    sh = df.select(F.col(id_col).alias("doc"), tokens(text_col).alias("_toks"))
     return sh.select(
         "doc", F.explode(ngrams_from_tokens(F.col("_toks"), n)).alias("shingle")
     )
+
+
+def _set_shingles(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> tuple[DataFrame, int]:
+    """Set-semantics (doc, shingle) stream of :func:`_doc_shingles` and its
+    partition count, ``max(input partitions, defaultParallelism)`` — read
+    off the input frame once, and the count the keyed frames'
+    ``repartition(shingle)`` uses.
+
+    The floor is the scan-parallelism fix (r13, guide §2.5 "input skew"):
+    the bench corpora are ONE parquet file → a 1-split scan, so the regex
+    tokenize pipeline ran as a single ~3 s task at the head of every
+    labeling/pair query. Spread the (tiny) document rows across the cluster
+    by id hash before tokenizing — deterministic, and gated on the scan
+    actually being narrower than the cluster, so at 100 TB (thousands of
+    splits) no corpus-text shuffle ever fires."""
+    floor = df.sparkSession.sparkContext.defaultParallelism
+    parts = df.rdd.getNumPartitions()
+    if parts < floor:
+        df, parts = df.repartition(floor, F.col(id_col)), floor
+    sh = df.select(F.col(id_col).alias("doc"), tokens(text_col).alias("_toks"))
+    grams = F.array_distinct(ngrams_from_tokens(F.col("_toks"), n))
+    return sh.select("doc", F.explode(grams).alias("shingle")), parts
 
 
 def candidate_pair_shingle_stats(
@@ -182,10 +188,13 @@ def _keyed_capped_shingles(
       regex pipeline per join side) and it establishes the hash
       partitioning every consumer needs: the df/hot aggregation, the
       self-join (both sides), and the per-shingle grouping all fuse on it
-      with NO further Exchange. Partition count comes from
-      ``spark.sql.shuffle.partitions`` — the session-owned scale knob
-      (AQE cannot coalesce under persist, which is exactly what keeps the
-      pair-generating join ``parts``-way parallel on an idle 32-core host).
+      with NO further Exchange. The partition count comes from the
+      input: the document frame's own partition count, floored at
+      ``defaultParallelism`` (:func:`_set_shingles`). AQE cannot coalesce
+      under persist, so the session's ``spark.sql.shuffle.partitions``
+      would fix every consumer stage at that many tasks however small the
+      corpus; sized from the input it is the core count for a one-file
+      corpus and the scan's split count at 100 TB.
     * The hot list (df > cap) aggregates straight off that Exchange
       (fused, no second shuffle) into a tiny eager checkpoint whose
       measured size makes the cap an AQE broadcast anti join — which
@@ -195,9 +204,8 @@ def _keyed_capped_shingles(
     materializing the derived pairs (the lsh_candidate_pairs cache-hygiene
     rule).
     """
-    sh = _doc_shingles(df, text_col, id_col, n).repartition(
-        F.col("shingle")
-    )
+    sh, parts = _set_shingles(df, text_col, id_col, n)
+    sh = sh.repartition(parts, F.col("shingle"))
     if max_shingle_freq is not None:
         hot = (
             sh.groupBy("shingle")
@@ -221,11 +229,13 @@ def ngram_jaccard_pairs(
     """Candidate near-duplicate pairs ``(doc_a, doc_b, jaccard)`` with
     ``doc_a < doc_b`` and n-gram Jaccard ≥ ``threshold``.
 
-    EAGER + NON-RECOVERABLE: the result (and the intermediate shingle
-    frame) is ``localCheckpoint``-ed at call time — no CacheManager entry
-    is ever created (cache-hygiene contract — see ``lsh_candidate_pairs``);
-    executor loss invalidates the returned frame, and callers composing
-    larger pipelines should treat this call as a materialization barrier.
+    EAGER + NON-RECOVERABLE: the result is ``localCheckpoint``-ed at call
+    time; the intermediate keyed shingle frame is ``persist()``-ed only
+    while the result materializes and is unpersisted before returning, so
+    no CacheManager entry outlives the call (cache-hygiene contract — see
+    ``lsh_candidate_pairs``). Executor loss invalidates the returned frame,
+    and callers composing larger pipelines should treat this call as a
+    materialization barrier.
     """
     shingles = _keyed_capped_shingles(
         df, text_col, id_col, n, max_shingle_freq
@@ -320,8 +330,8 @@ def ngram_jaccard_probe_pairs(
     self-join runs on the BATCH-sized shingle frame only.
 
     Same eager + non-recoverable cache-hygiene contract as
-    ``ngram_jaccard_pairs`` (result and shingle inputs
-    ``localCheckpoint``-ed — no CacheManager entries).
+    ``ngram_jaccard_pairs`` (result ``localCheckpoint``-ed, persisted
+    shingle sides unpersisted before returning).
     """
     # Key-partitioned + persisted sides (the _keyed_capped_shingles shape):
     # each side's repartition(shingle) Exchange is the sharing point — its
@@ -329,13 +339,13 @@ def ngram_jaccard_probe_pairs(
     # consumer stages race the persist cache — and the established hash
     # partitioning lets the probe⋈index shingle join, the within-probe
     # self-join, and the per-shingle df aggregate all fuse with no further
-    # Exchange, parts-way parallel.
-    sh_p = _doc_shingles(probe, text_col, id_col, n).repartition(
-        F.col("shingle")
-    ).persist()
-    sh_i = _doc_shingles(index, text_col, id_col, n).repartition(
-        F.col("shingle")
-    ).persist()
+    # Exchange. Both sides take the larger of their input-sized partition
+    # counts so they stay co-partitioned.
+    sh_p, parts_p = _set_shingles(probe, text_col, id_col, n)
+    sh_i, parts_i = _set_shingles(index, text_col, id_col, n)
+    parts = max(parts_p, parts_i)
+    sh_p = sh_p.repartition(parts, F.col("shingle")).persist()
+    sh_i = sh_i.repartition(parts, F.col("shingle")).persist()
     if max_shingle_freq is not None:
         # Hot list over the COMBINED universe (df counts probe and index
         # docs alike) — exactly the self-join's drop_hot_buckets semantics

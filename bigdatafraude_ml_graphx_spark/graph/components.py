@@ -8,10 +8,14 @@ same semantics in pure DataFrames: iterative min-label propagation
     label(v) ← min(label(v), min over neighbors u of label(u))
 
 to fixpoint. Each iteration is one equi join + one aggregation (both
-AQE-planned); lineage is truncated with ``localCheckpoint`` every iteration —
-the lesson the reference's own PageRank loop teaches (its per-iteration time
-grows 0.27 s → 1.10 s without checkpointing,
-``notebooks/4_graphx.ipynb:753-757``).
+AQE-planned), ending in an EAGER ``localCheckpoint`` that truncates the
+lineage — the lesson the reference's own PageRank loop teaches (its
+per-iteration time grows 0.27 s → 1.10 s without checkpointing,
+``notebooks/4_graphx.ipynb:753-757``). The convergence fingerprint is an
+observed metric of that same checkpoint job
+(``pagerank._counted_checkpoint``), so a round costs one checkpoint and no
+separate fingerprint collect. A graph that needs more than ``max_iter``
+rounds raises instead of returning truncated labels.
 
 Scale: O(graph diameter) rounds. Social/fraud graphs have tiny diameters
 (≤ ~20). The edge list is partitioned ONCE on the propagation key and cached;
@@ -35,7 +39,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    checkpoint_every: int = 1,
     broadcast_rows: int = 2_000_000,
     dedup_edges: bool = True,
 ) -> DataFrame:
@@ -46,6 +49,9 @@ def connected_components(
     appear in no edge; they become singleton components, matching GraphFrames
     (the reference graph is 99.8% singletons — 275,191 of 275,236 components,
     cell 44735382 output).
+
+    Raises ``RuntimeError`` when the labels have not reached a fixpoint
+    after ``max_iter`` rounds (a path of ``k`` edges needs ``k + 1``).
     """
     # Materialize the (possibly expensive) edge lineage ONCE — every
     # iteration joins against `sym`. Hash-partition on ``v`` (the key the
@@ -56,7 +62,12 @@ def connected_components(
     # regime a whole round shuffles NOTHING — while the sized partition
     # count keeps small graphs off the task-overhead floor and large ones
     # fully parallel.
-    from .pagerank import _coalesced, _maybe_broadcast, _sized_keyed_persist
+    from .pagerank import (
+        _coalesced,
+        _counted_checkpoint,
+        _maybe_broadcast,
+        _sized_keyed_persist,
+    )
 
     sym = symmetrize(edges.select(src, dst), src, dst).select(
         F.col(src).alias("u"), F.col(dst).alias("v")
@@ -72,15 +83,23 @@ def connected_components(
     ids = sym.select(F.col("u").alias("id"))
     if vertices is not None:
         ids = ids.unionByName(vertices.select("id"))
-    labels = ids.distinct().withColumn("component", F.col("id"))
-    # Lazy checkpoint: the count() is the materializing action (one job,
-    # not two — same fusion as the iteration body below).
-    labels = labels.localCheckpoint(eager=False)
-    n_verts = labels.count()
+    # Convergence test without a join: labels only ever DECREASE
+    # (numerically for numeric ids, lexicographically for string ids), so
+    # the fixpoint is reached exactly when the label multiset stops
+    # changing, i.e. when the checkpoint's bit_xor(xxhash64(id, component))
+    # fingerprint repeats. A plain sum("component") would be NULL for string
+    # ids (the reference's own graph casts ids to string,
+    # /root/reference/notebooks/4_graphx.ipynb:334-336) and NULL == NULL
+    # would end the loop after one round with wrong labels; bit_xor is
+    # order-insensitive and cannot overflow under ANSI mode (sum can). (An
+    # xor collision between consecutive DIFFERENT label sets would exit one
+    # round early — probability ~2^-64 per round, negligible.)
+    labels, n_verts, prev_fp = _counted_checkpoint(
+        ids.distinct().withColumn("component", F.col("id"))
+    )
     labels = _coalesced(labels, n_verts)
 
-    prev_fp: int | None = None
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # Candidate labels flowing across edges: min neighbor label per
         # vertex. The label frame is one narrow row per vertex — broadcast
         # it while it fits so the (much larger) edge list never re-shuffles
@@ -106,35 +125,19 @@ def connected_components(
                 F.least("component", "nbr_component").alias("component"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            # LAZY checkpoint (optimization r13): the fingerprint aggregate
-            # below is the job that materializes it — one job per iteration
-            # instead of two (the eager checkpoint job + the collect job),
-            # halving the per-iteration scheduling overhead that dominates
-            # small-diameter rounds. Lineage truncation is unchanged: the
-            # blocks are saved by that first action, and every later
-            # consumer (the next iteration, the caller) reads them.
-            new_labels = new_labels.localCheckpoint(eager=False)
-        # Convergence test without a join: labels only ever DECREASE
-        # (numerically for numeric ids, lexicographically for string ids), so
-        # the fixpoint is reached exactly when the label multiset stops
-        # changing. Detect change via a type-agnostic hash fingerprint — one
-        # cheap aggregate over the (checkpointed) labels. A plain
-        # F.sum("component") would be NULL for string ids (the reference's own
-        # graph casts ids to string,
-        # /root/reference/notebooks/4_graphx.ipynb:334-336) and NULL == NULL
-        # would end the loop after one round with wrong labels. bit_xor is
-        # order-insensitive and cannot overflow under ANSI mode (sum can).
-        # (An xor collision between consecutive DIFFERENT label sets would
-        # exit one round early — probability ~2^-64 per round, negligible.)
-        fingerprint = F.bit_xor(F.xxhash64("id", "component"))
-        new_fp = new_labels.agg(fingerprint).collect()[0][0]
-        if prev_fp is None:
-            prev_fp = labels.agg(fingerprint).collect()[0][0]
-        labels = new_labels
+        # One job per round: the eager checkpoint truncates the lineage and
+        # reports the new fingerprint on the same job.
+        labels, _, new_fp = _counted_checkpoint(new_labels)
         if new_fp == prev_fp:
             break
         prev_fp = new_fp
+    else:
+        sym.unpersist()
+        raise RuntimeError(
+            f"connected_components: labels did not reach a fixpoint within "
+            f"max_iter={max_iter} rounds — the graph's diameter exceeds the "
+            f"budget and the labels would be truncated; raise max_iter."
+        )
     sym.unpersist()
     return labels
 
@@ -170,10 +173,9 @@ def connected_components_star(
     """
     from pyspark.sql import Window
 
-    # LAZY checkpoints (r14 job fusion, same pattern as
-    # connected_components above): the per-round fingerprint aggregate is
-    # the action that materializes each checkpoint — one job per round
-    # instead of two; truncation unchanged.
+    # LAZY checkpoints (r14 job fusion): the per-round fingerprint
+    # aggregate is the action that materializes each checkpoint — one job
+    # per round instead of two; truncation unchanged.
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))

@@ -38,11 +38,33 @@ The 1e-14 absolute quantization keeps ~9+ significant digits for graphs up to
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 _ACC = "decimal(38,18)"  # used only for weight normalization totals
 _SCALE = 1e14
+
+
+def _counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int, int | None]:
+    """Eagerly ``localCheckpoint`` ``df`` and return ``(frame, rows,
+    fingerprint)`` — all three from the ONE job that materializes the
+    checkpoint.
+
+    The row count and the order-insensitive fingerprint
+    ``bit_xor(xxhash64(<all columns>))`` (None for an empty frame) ride on
+    that job as a ``DataFrame.observe`` metric, so neither needs a second
+    job over the blocks. The checkpoint must be EAGER: a lazy checkpoint's
+    observation fires when the checkpoint is declared, before anything
+    runs, and reads ``rows=0, fingerprint=None``.
+    """
+    obs = Observation()
+    ck = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*df.columns)).alias("fp"),
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return ck, m["n"], m["fp"]
 
 
 def _sized_keyed_persist(df: DataFrame, key: str, target_rows: int = 250_000) -> DataFrame:
@@ -55,12 +77,12 @@ def _sized_keyed_persist(df: DataFrame, key: str, target_rows: int = 250_000) ->
     partial+final with no Exchange) AND a partition count matched to the data
     (32 near-empty partitions make a 10k-edge iteration pure task overhead;
     at 100 TB the same formula yields thousands of partitions and full
-    parallelism). The count is read off an eager localCheckpoint, so it costs
-    one materialization the loop needs anyway — not an extra pass over the
-    upstream lineage (e.g. a co-occurrence self-join).
+    parallelism). The count comes with the eager checkpoint's own job
+    (:func:`_counted_checkpoint`) — one materialization the loop needs
+    anyway, not an extra pass over the upstream lineage (e.g. a
+    co-occurrence self-join) nor a count job over the blocks.
     """
-    ck = df.localCheckpoint(eager=True)
-    n = ck.count()
+    ck, n, _ = _counted_checkpoint(df)
     parts = max(1, min(ck.rdd.getNumPartitions(), -(-n // target_rows)))
     return ck.repartition(parts, F.col(key)).persist()
 

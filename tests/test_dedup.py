@@ -112,3 +112,65 @@ def test_doc_shingles_map_side_distinct_equals_global_distinct(docs):
     a = sorted(map(tuple, new.collect()))
     b = sorted(map(tuple, old.collect()))
     assert a == b
+
+
+def _exchanges_above_cache(df) -> int:
+    """Exchange nodes in ``df``'s physical plan, not counting the plans of
+    the cached frames it scans (an InMemoryTableScan is a leaf)."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+
+    def walk(node):
+        kids = node.children()
+        return ("Exchange" in node.nodeName()) + sum(
+            walk(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return walk(root)
+
+
+def test_keyed_shingle_frames_sized_from_input(spark, sf_dir, monkeypatch):
+    """The keyed shingle frames take their partition count from the input —
+    max(input partitions, defaultParallelism) — not from the session's
+    spark.sql.shuffle.partitions (8 in this suite). The self-join over the
+    keyed frame still needs no Exchange, and both sides of the probe join
+    share one count (the larger), so they stay co-partitioned."""
+    from bigdatafraude_ml_graphx_spark.catalog import load_table
+    from bigdatafraude_ml_graphx_spark.dedup.ngram import (
+        _keyed_capped_shingles,
+        ngram_jaccard_probe_pairs,
+    )
+
+    floor = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents")
+    assert docs.rdd.getNumPartitions() == 1  # a one-file corpus
+    sh = _keyed_capped_shingles(docs, "text", "doc_id", 3, None)
+    try:
+        assert sh.rdd.getNumPartitions() == floor
+        sh.count()  # materialized: consumers plan off its partitioning
+        joined = sh.alias("a").join(
+            sh.hint("merge").alias("b"),
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc") < F.col("b.doc")),
+        )
+        assert _exchanges_above_cache(joined) == 0
+    finally:
+        sh.unpersist()
+
+    persisted = []
+    cls = type(docs)
+    orig_persist = cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return orig_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", recording_persist)
+    index_parts = floor + 2
+    ngram_jaccard_probe_pairs(
+        docs.filter(F.col("doc_id") % 17 == 0),
+        docs.filter(F.col("doc_id") % 17 != 0).repartition(index_parts),
+        max_shingle_freq=10,
+    )
+    assert [f.rdd.getNumPartitions() for f in persisted] == [index_parts] * 2

@@ -71,6 +71,43 @@ def test_connected_components_isolated_vertices(spark, crafted):
     assert comp[1] == 1
 
 
+def test_connected_components_raises_instead_of_truncating(spark):
+    """A path of 6 edges needs 6 rounds to carry label 0 to its far end and
+    a 7th to see the fixpoint: max_iter=6 must raise rather than return
+    partial labels, and max_iter=7 returns the min-id label everywhere."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=6"):
+        connected_components(edges, max_iter=6)
+    comp = {
+        r["id"]: r["component"]
+        for r in connected_components(edges, max_iter=7).collect()
+    }
+    assert comp == {v: 0 for v in range(7)}
+
+
+@pytest.mark.parametrize("n", [0, 57])
+def test_counted_checkpoint_reads_count_and_fingerprint(spark, n):
+    """The observed row count and fingerprint equal a separate count() and
+    bit_xor(xxhash64) over the returned frame, which is a real checkpoint
+    (its plan scans the saved RDD, not the upstream shuffle)."""
+    from bigdatafraude_ml_graphx_spark.graph.pagerank import _counted_checkpoint
+    from bigdatafraude_ml_graphx_spark.plans import formatted_plan
+
+    df = (
+        spark.range(n)
+        .repartition(3)
+        .select("id", (F.col("id") % 5).alias("g"))
+    )
+    ck, rows, fp = _counted_checkpoint(df)
+    assert rows == ck.count() == n
+    assert fp == ck.agg(F.bit_xor(F.xxhash64("id", "g"))).collect()[0][0]
+    assert (fp is None) == (n == 0)
+    plan = formatted_plan(ck)
+    assert "Scan ExistingRDD" in plan and "Exchange" not in plan, plan
+
+
 def test_pagerank_ordering(crafted):
     # Uniform weights normalized per-src over the symmetrized edges.
     e = symmetrize(crafted.withColumn("weight", F.lit(1.0)))
